@@ -96,6 +96,8 @@ def _stop_jvm(spark) -> None:
     from pyspark import SparkContext
 
     proc = SparkContext._gateway.proc
+    if proc.poll() is not None:  # already stopped
+        return
     spark.stop()
     proc.stdin.close()
     try:
@@ -198,6 +200,7 @@ def run(args) -> dict:
     work = os.path.join(os.getcwd(), ".perfbench_work", f"{args.workload}-{args.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
+    spark = None
     try:
         _prepare_env(work)
         import temporai_mivdp_spark.mivdp.api  # noqa: F401
@@ -275,6 +278,8 @@ def run(args) -> dict:
         return {"correct": cross_ok and failed == 0, "attempted": attempted, "failed": failed,
                 "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}}
     finally:
+        if spark is not None:  # a no-op when the run got as far as stopping it
+            _stop_jvm(spark)
         shutil.rmtree(work, ignore_errors=True)
         parent = os.path.dirname(work)
         if os.path.isdir(parent) and not os.listdir(parent):
