@@ -59,6 +59,10 @@ def _session(work: str, trace: bool):
         "spark.driver.memory": "2g",
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
+        # Python workers: temp files under ``work``, the checkout importable
+        # (Spark merges this PYTHONPATH with its own and the inherited one)
+        "spark.executorEnv.TMPDIR": os.path.join(work, "tmp"),
+        "spark.executorEnv.PYTHONPATH": os.getcwd(),
     }
     if trace:
         log_dir = os.path.join(work, "eventlog")
@@ -77,17 +81,14 @@ def _session(work: str, trace: bool):
 
 
 def _prepare_env(work: str) -> None:
-    """Point every temp path of this process and its children at ``work``
-    and make the checkout importable for Python workers."""
+    """Point every temp path of this process and the JVM at ``work`` and
+    make the checkout importable here; ``_session`` does the same for the
+    Python workers."""
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     tempfile.tempdir = tmp
-    root = os.getcwd()
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (root, os.environ.get("PYTHONPATH")) if p)
-    sys.path[:0] = [root]
+    sys.path[:0] = [os.getcwd()]
 
 
 def _stop_jvm(spark) -> None:
