@@ -8,11 +8,13 @@ file layout changes with it.
 ``generate(spark, out_dir, seed, n_subjects, ...)`` writes
 
 * ``lake/<table>.parquet/``                 Parquet lake, one dir per table
-* ``mimic/<version>/{core,hosp,icu}/*.csv.gz``  the reference's gzip-CSV drop
-  (one single-part gzip file per table, as MIMIC-IV ships it)
 * ``icd9_to_10.tsv``                          ICD-9 -> ICD-10 map
 
-and returns an ``Inputs`` record with the row and byte counts.
+and returns an ``Inputs`` record with the row and byte counts;
+``write_csv_drop(spark, inputs)`` adds
+
+* ``mimic/<version>/{core,hosp,icu}/*.csv.gz``  the reference's gzip-CSV drop
+  (one single-part gzip file per table, as MIMIC-IV ships it).
 """
 
 from __future__ import annotations
@@ -260,9 +262,8 @@ def _write_single_gz(df: DataFrame, dest: str, tmp: str) -> None:
 
 
 def generate(spark: SparkSession, out_dir: str, seed: int, n_subjects: int,
-             visits: tuple[int, int] = (1, 3), events_per_stay: int = 35,
-             lake: bool = True, csv: bool = True) -> Inputs:
-    """Write the lake and/or the gzip-CSV drop plus the ICD map under ``out_dir``."""
+             visits: tuple[int, int] = (1, 3), events_per_stay: int = 35) -> Inputs:
+    """Write the Parquet lake and the ICD map under ``out_dir``."""
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir)
     inp = Inputs(lake=os.path.join(out_dir, "lake"),
@@ -272,17 +273,19 @@ def generate(spark: SparkSession, out_dir: str, seed: int, n_subjects: int,
         f.write("\n".join(icd_map_lines()) + "\n")
     frames = tables(spark, seed, n_subjects, visits, events_per_stay, PARTITIONS)
     for name, df in frames.items():
-        if lake:
-            df.write.mode("overwrite").parquet(os.path.join(inp.lake, name + ".parquet"))
-        if csv:
-            rel = MIMIC_TABLES[name][0]
-            _write_single_gz(df, os.path.join(inp.mimic_root, VERSION, rel),
-                             os.path.join(out_dir, "_tmp_" + name))
-        inp.rows[name] = (_parquet_rows(os.path.join(inp.lake, name + ".parquet")) if lake
-                          else df.count())
+        path = os.path.join(inp.lake, name + ".parquet")
+        df.write.mode("overwrite").parquet(path)
+        inp.rows[name] = _parquet_rows(path)
     inp.rows["icd_map"] = len(icd_map_lines()) - 1
-    if lake:
-        inp.lake_bytes = dir_bytes(inp.lake)
-    if csv:
-        inp.csv_bytes = dir_bytes(inp.mimic_root) + os.path.getsize(inp.icd_map)
+    inp.lake_bytes = dir_bytes(inp.lake)
     return inp
+
+
+def write_csv_drop(spark: SparkSession, inp: Inputs) -> None:
+    """Write the lake's rows as the gzip-CSV drop under ``inp.mimic_root``
+    (not needed by ``icu_mortality``, which reads the lake)."""
+    for name, (rel, _) in MIMIC_TABLES.items():
+        _write_single_gz(spark.read.parquet(os.path.join(inp.lake, name + ".parquet")),
+                         os.path.join(inp.mimic_root, VERSION, rel),
+                         os.path.join(os.path.dirname(inp.lake), "_tmp_" + name))
+    inp.csv_bytes = dir_bytes(inp.mimic_root)

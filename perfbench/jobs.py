@@ -4,17 +4,15 @@ artifact written.
 Every stage writes its artifacts as soon as it has built them, so the
 write is what forces the stage's frames. ``icu_mortality`` hands stages
 over through those Parquet artifacts (the reference pipeline's file
-boundaries between EP-1, EP-2 and EP-3); ``icu_readmission_csv`` keeps the
-lazy frames ``mivdp.api`` returns, so later stages re-derive them from the
-CSV drop. With tracing on, each stage runs inside a span named after the
-module it calls; ``sources.scan`` is the one span that adds work: it scans
-the raw inputs to a noop sink, so the scan cost is measured apart from the
-stages that fuse it.
+boundaries between EP-1, EP-2 and EP-3). With tracing on, each stage runs
+inside a span named after the module it calls; ``sources.scan`` is the one
+span that adds work: it scans the raw inputs to a noop sink, so the scan
+cost is measured apart from the stages that fuse it.
 
-A job returns ``{artifact name: parquet path}``; the icu jobs add, under
-``"__bucketed_chart"`` and ``"__n_buckets"``, the bucketed chart frame the
-dense chart grid was built from and its bucket count (the input of the
-pandas differential check).
+A job returns ``{artifact name: parquet path}``; ``icu_mortality`` adds,
+under ``"__bucketed_chart"`` and ``"__n_buckets"``, the bucketed chart
+frame the dense chart grid was built from and its bucket count (the input
+of the pandas differential check).
 
 ``icu_mortality`` writes the summaries and vocabularies of the two
 valued modalities (med, chart) only: every artifact costs the job a few
@@ -28,22 +26,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from temporai_mivdp_spark import queries_llm
-from temporai_mivdp_spark.mivdp import api
 from temporai_mivdp_spark.mivdp import cohort as coh
 from temporai_mivdp_spark.mivdp import datagen as dg
 from temporai_mivdp_spark.mivdp import features as feat
 from temporai_mivdp_spark.mivdp import icd
-from temporai_mivdp_spark.mivdp.io import MIMIC_TABLES, load_mimic_table
+from temporai_mivdp_spark.mivdp.io import MIMIC_TABLES
 from temporai_mivdp_spark.sources import load_table, write_parquet
 
 from spans import Tracer
 
-#: EP-3 windows: mortality 24 h in 1 h buckets after a 6 h prediction gap;
-#: readmission a 12 h window in 2 h buckets, anchored at the stay's end
+#: EP-3 window: 24 h in 1 h buckets after a 6 h prediction gap
 MORTALITY_WINDOW = {"include_time": 24, "bucket": 1, "pred_window": 6}
-READMISSION_WINDOW = {"include_time": 12, "bucket": 2}
-READMISSION_GAP_DAYS = 30
-DISEASE_LABEL = "I50"
 
 
 def _noop_scan(frames: dict[str, DataFrame]) -> None:
@@ -124,52 +117,6 @@ def icu_mortality(spark: SparkSession, inp, out_dir: str, tr: Tracer) -> dict:
         vocab = {name: tr.call(dg.vocabulary, bucketed[name], "itemid") for name in ("med", "chart")}
         _write_all(vocab, out_dir, "vocab", art)
     art["__bucketed_chart"] = bucketed["chart"]
-    art["__n_buckets"] = n_buckets
-    return art
-
-
-def icu_readmission_csv(spark: SparkSession, inp, out_dir: str, tr: Tracer) -> dict:
-    """The ``mivdp.api`` chain over the gzip-CSV drop, readmission label
-    restricted to admissions with a ``DISEASE_LABEL`` diagnosis."""
-    art: dict = {}
-    root, ver = inp.mimic_root, inp.version
-    if tr.enabled:
-        with tr.span("sources.scan"):
-            _noop_scan({n: load_mimic_table(spark, root, ver, n) for n in MIMIC_TABLES})
-            _noop_scan({"icd_map": icd.read_icd_mapping(spark, inp.icd_map)})
-
-    with tr.span("mivdp.cohort"):
-        cohort, name = tr.call(
-            api.extract_data, spark, root, ver, use_icu=True, label="readmission",
-            time=READMISSION_GAP_DAYS, disease_label=DISEASE_LABEL,
-            icd_map_path=inp.icd_map, persist=True)
-        art["cohort"] = os.path.join(root, "data", "cohort", name)
-
-    with tr.span("mivdp.features"):
-        feats = tr.call(api.feature_icu, spark, root, ver, cohort,
-                        icd_map_path=inp.icd_map, persist=True)
-        for mod in feats:
-            art[f"features/{mod}"] = os.path.join(root, "data", "features", mod)
-        with tr.span("mivdp.features.clean_chart"):
-            feats = tr.call(api.preprocess_features_icu, feats, group_diag="convert_group",
-                            clean_chart=True, impute_outlier_chart=True,
-                            thresh=98, left_thresh=2)
-            _write_all({"chart": feats["chart"]}, out_dir, "features_clean", art)
-        _write_all({"diag": feats["diag"]}, out_dir, "features_clean", art)
-        _write_all(tr.call(api.generate_summary_icu, feats), out_dir, "summary", art)
-
-    with tr.span("mivdp.datagen"):
-        w = READMISSION_WINDOW
-        ts = tr.call(api.generate_time_series, cohort, feats, label="readmission",
-                     include_time=w["include_time"], bucket=w["bucket"])
-        _write_all(ts, out_dir, "ts", art)
-    # the api keeps the bucketed chart internal; rebuild it with the same
-    # datagen calls for the differential check (outside any span)
-    n_buckets = w["include_time"] // w["bucket"]
-    evt = dg.trim_events_end_anchored(dg.prepare_point_events(feats["chart"], ts["data"]),
-                                      ts["data"], has_stop=False)
-    art["__bucketed_chart"] = dg.bucket_point_events(
-        evt, w["include_time"], w["bucket"], value_col="valuenum")
     art["__n_buckets"] = n_buckets
     return art
 

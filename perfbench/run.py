@@ -29,19 +29,32 @@ import sys  # noqa: E402
 import tempfile  # noqa: E402
 
 BENCH_DIR = os.path.dirname(os.path.abspath(__file__))
-WORKLOADS = ("icu_mortality", "icu_readmission_csv", "llm_guard_curation")
+WORKLOADS = ("icu_mortality", "llm_guard_curation")
+#: committed artifact hashes per seed, one file per workload (``record_hashes.py``)
+EXPECTED_DIR = os.path.join(BENCH_DIR, "expected")
 
 #: input sizes: the jobs are overhead-bound at any size the time budget
 #: allows (README.md), so these keep one run near a minute on 4 cores
 SIZES = {
     "icu_mortality": {"n_subjects": 1000, "visits": (1, 3), "events_per_stay": 35},
-    "icu_readmission_csv": {"n_subjects": 1500, "visits": (3, 8), "events_per_stay": 35},
     "llm_guard_curation": {"n_docs": 1000},
 }
 ALL_SPANS = ("sources.scan", "mivdp.cohort", "mivdp.features", "mivdp.features.clean_chart",
              "mivdp.datagen", "llmdata.guard_corpus", "llmdata.curation")
 #: stays sampled for the pandas differential of the dense chart grid
 DIFF_STAY_MOD = 32
+
+
+def recorded_hashes(workload: str, seed: int) -> dict[str, str] | None:
+    """The committed artifact hashes of ``workload`` for ``seed``, or None
+    when that seed was not recorded."""
+    path = os.path.join(EXPECTED_DIR, workload + ".json")
+    with open(path) as f:
+        rec = json.load(f)
+    if rec["sizes"] != json.loads(json.dumps(SIZES[workload])):
+        raise ValueError(f"{path} was recorded at other input sizes than "
+                         f"{SIZES[workload]}: re-record it with record_hashes.py")
+    return rec["seeds"].get(str(seed))
 
 
 def _cores() -> int:
@@ -126,22 +139,17 @@ class Runner:
             return
         import gen_mimic
 
-        lake = self.workload == "icu_mortality"
         inp = gen_mimic.generate(self.spark, self.in_dir, self.seed, size["n_subjects"],
-                                 visits=size["visits"], events_per_stay=size["events_per_stay"],
-                                 lake=lake, csv=not lake)
+                                 visits=size["visits"], events_per_stay=size["events_per_stay"])
+        # the job reads the lake and the ICD map
         self.in_rows = sum(inp.rows.values())
-        self.in_bytes = inp.lake_bytes + (0 if lake else inp.csv_bytes)
-        if lake:  # the lake job reads the ICD map too
-            self.in_bytes += os.path.getsize(inp.icd_map)
+        self.in_bytes = inp.lake_bytes + os.path.getsize(inp.icd_map)
         self.inputs = inp
 
     def run_job(self, tracer) -> dict:
         import jobs
 
         shutil.rmtree(self.out_dir, ignore_errors=True)
-        if self.workload == "icu_readmission_csv":
-            shutil.rmtree(os.path.join(self.inputs.mimic_root, "data"), ignore_errors=True)
         fn = getattr(jobs, self.workload)
         return fn(self.spark, self.inputs, self.out_dir, tracer)
 
@@ -174,10 +182,9 @@ class Runner:
 
         from temporai_mivdp_spark.mivdp.differential import densify_chart_pandas
 
-        dense_key = "dense/chart" if "dense/chart" in art else "ts/dense_chart"
         bucketed = art["__bucketed_chart"].filter(F.col("stay_id") % DIFF_STAY_MOD == 0)
         want = densify_chart_pandas(bucketed, art["__n_buckets"]).toPandas()
-        got = pq.read_table(art[dense_key]).to_pandas()
+        got = pq.read_table(art["dense/chart"]).to_pandas()
         got = got[got["stay_id"] % DIFF_STAY_MOD == 0]
         return len(got) > 0 and checks.same_rows(got, want)
 
@@ -187,7 +194,7 @@ class Runner:
 
         cells = useful = 0
         for name, path in art.items():
-            if name.startswith(("dense/", "ts/dense_")):
+            if name.startswith("dense/"):
                 signal = pq.read_table(path, columns=["signal"]).column("signal")
                 cells += len(signal)
                 useful += signal.to_numpy().sum()
@@ -214,15 +221,21 @@ def run(args) -> dict:
         runner.generate()
         with PeakRss() as rss:
             # cold iteration in this JVM: its artifacts are cross-checked
-            # against an independent implementation and their hashes are
-            # what every later iteration must reproduce
+            # against an independent implementation, and every iteration's
+            # hashes must equal the ones recorded for this seed (for a seed
+            # with none recorded: the cold iteration's)
             t0 = time.perf_counter()
             art = runner.run_job(Tracer())
             first_job_s = time.perf_counter() - t0
             cross_ok = runner.cross_check(art)
-            expected = runner.artifact_hashes(art)
+            cold = runner.artifact_hashes(art)
+            expected = recorded_hashes(args.workload, args.seed)
+            if expected is None:
+                print(f"seed {args.seed} has no recorded hashes: artifacts are checked "
+                      "for repeatability and by the cross-check only", file=sys.stderr)
+                expected = cold
             out_bytes = runner.output_bytes(art)
-            attempted, failed = 1, 0 if cross_ok else 1
+            attempted, failed = 1, 0 if cross_ok and cold == expected else 1
 
             # warm iterations: start one only while it should end by the
             # deadline (by the last iteration's time), and at least one
@@ -262,10 +275,10 @@ def run(args) -> dict:
         if args.trace:
             metrics = _per_layer(os.path.join(work, "eventlog"), tracer, fill, traced_s - job_s)
             metrics["first_job_s"] = (first_job_s, "s")
+            metrics["job_cpu_s"] = (statistics.median(cpus), "s")
         else:
             metrics = {
                 "job_s": (job_s, "s"),
-                "job_cpu_s": (statistics.median(cpus), "s"),
                 "setup_s": (setup_s, "s"),
                 "rows_per_s": (runner.in_rows / job_s, "1/s"),
                 "peak_rss_mb": (max(peaks), "MB"),

@@ -49,6 +49,30 @@ def test_mimic_same_seed_same_hashes_any_partitioning(spark):
     assert all(a[t] != b[t] for t in a)
 
 
+def test_mimic_csv_drop_holds_the_lake_rows(spark, tmp_path):
+    import gen_mimic
+
+    from temporai_mivdp_spark.mivdp.io import MIMIC_TABLES, load_mimic_table
+
+    inp = gen_mimic.generate(spark, str(tmp_path / "in"), seed=5, n_subjects=20,
+                             events_per_stay=10)
+    gen_mimic.write_csv_drop(spark, inp)
+    assert inp.csv_bytes > 0
+    for name in MIMIC_TABLES:
+        lake = spark.read.parquet(os.path.join(inp.lake, name + ".parquet")).toPandas()
+        csv = load_mimic_table(spark, inp.mimic_root, inp.version, name).toPandas()
+        assert checks.table_hash(csv) == checks.table_hash(lake), name
+        assert len(lake) == inp.rows[name]
+
+
+def test_recorded_hashes_hold_for_the_run_sizes():
+    import run
+
+    for workload in run.WORKLOADS:
+        assert run.recorded_hashes(workload, 0), workload
+        assert run.recorded_hashes(workload, -1) is None
+
+
 def test_docs_same_seed_same_table_other_seed_differs():
     a, b, c = (gen_docs.documents(s, 300) for s in (7, 7, 8))
     assert a.equals(b)
