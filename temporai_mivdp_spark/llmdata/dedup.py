@@ -100,23 +100,26 @@ def shingles(
     )
 
 
-def _hashed_shingle_rows(toks: DataFrame, n: int, id_col: str) -> DataFrame:
-    """(id, shingle) rows with the shingle already xxhash64'd, from a
-    pre-tokenized (id, __toks) frame. Hashing INSIDE the transform (vs.
-    after the explode) keeps the Generate node emitting 8-byte longs
-    instead of strings — measured 12% off the shingle+set stage at
-    sf0.1, same sets bit-for-bit. Shared by the posting-list build and
-    the hot-key detector so the two can never drift onto different
-    shingle identities."""
-    return toks.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("shingle"),
+def _ngram_hashes(n: int) -> Column:
+    """xxhash64 of every word n-gram of the ``__toks`` array column, in
+    position order. Hashing INSIDE the transform (vs. after an explode)
+    keeps a Generate emitting 8-byte longs instead of strings — measured
+    12% off the shingle+set stage at sf0.1, same sets bit-for-bit. Every
+    hashed-shingle consumer calls this one expression, so none can drift
+    onto a different shingle identity."""
+    return F.transform(
+        F.sequence(F.lit(0), F.size("__toks") - n),
+        lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
     )
+
+
+def _hashed_shingle_rows(toks: DataFrame, n: int, id_col: str) -> DataFrame:
+    """(id, shingle) rows, one per n-gram position with the shingle
+    xxhash64'd, from a pre-tokenized (id, __toks) frame. The package
+    builds its shingle sets row-locally (``_hashed_shingle_sets``); this
+    exploded form is only the exact reference a test checks the sampled
+    hot-key detector against."""
+    return toks.select(id_col, F.explode(_ngram_hashes(n)).alias("shingle"))
 
 
 def _hashed_shingle_sets(toks: DataFrame, n: int, id_col: str) -> DataFrame:
@@ -137,12 +140,7 @@ def _hashed_shingle_sets(toks: DataFrame, n: int, id_col: str) -> DataFrame:
     keeps its own set."""
     return toks.select(
         id_col,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("__set"),
+        F.array_distinct(_ngram_hashes(n)).alias("__set"),
     )
 
 
@@ -204,8 +202,8 @@ def _posting_pairs_streamed(
     rows while materializing per-key array buffers: the repo's own
     worst 100x cell (SCALING.md r11/r12). The sort this plan pays
     instead is a Tungsten radix sort over fixed-width rows, and the
-    pair emit streams out of it. Measured (tools/exp_jaccard_posting.py,
-    interleaved min-of-R, identical pair output asserted): sf0.1
+    pair emit streams out of it. Measured (exp_jaccard_posting.py, see
+    commit c349e57; min-of-R, identical pair output asserted): sf0.1
     2.305 -> 1.955 s; 30x inflation 60.6 -> 23.2 s (2.6x); the
     materialize+self-join alternative ties at 30x but loses at sf0.1
     (3.669) and needs a per-run scratch write. This is the engine's one
@@ -422,7 +420,7 @@ def ngram_jaccard_pairs(
     # shuffles. Round 12 removed the aggregation outright (guide §1.2:
     # fix the distributed algorithm first); a groupBy(id, shingle)
     # dedup + count-window variant was also measured and rejected
-    # (tools/exp_jaccard_setsize.py: +12% at 30x vs collect_set).
+    # (exp_jaccard_setsize.py at c349e57: +12% at 30x vs collect_set).
     # Contract: id_col uniquely identifies documents (see
     # _hashed_shingle_sets — duplicate ids previously got their sets
     # unioned across rows; every caller in this repo dedups by a key).
@@ -461,7 +459,7 @@ def ngram_jaccard_pairs(
     #   instantiates the whole scan->shingle->set subtree twice;
     #   rejected (r11). Re-tried in r13 over a per-run materialized
     #   (id, sz, shingle) parquet: 3.669s at sf0.1, ties the streamed
-    #   emit at 30x — rejected (tools/exp_jaccard_posting.py variant B).
+    #   emit at 30x — rejected (exp_jaccard_posting.py B, c349e57).
     # * posting collect_list + posexplode/slice emit (shipped r5-r12) —
     #   2.305s at sf0.1, 60.6s at 30x (this session's interleaved A/B).
     # * sorted-run streamed emit (shipped r13) — 1.955s at sf0.1,
@@ -1241,24 +1239,12 @@ def span_coverage(
     spans = sized.filter(F.col("n_tokens") >= n).select(
         id_col,
         "n_tokens",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("pos", "__h"),
+        F.posexplode(_ngram_hashes(n)).alias("pos", "__h"),
     )
     survivors = (
         sized.filter(F.col("n_tokens") >= n)
         .select(
-            F.explode_outer(
-                F.array_distinct(
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("__toks") - n),
-                        lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-                    )
-                )
-            ).alias("__h")
+            F.explode_outer(F.array_distinct(_ngram_hashes(n))).alias("__h")
         )
         .groupBy("__h")
         .agg(F.count(F.lit(1)).alias("__nd"))
@@ -1338,12 +1324,7 @@ def remove_duplicated_spans(
     sized = toks.select(id_col, "__toks", F.size("__toks").alias("n_tokens"))
     spans = sized.filter(F.col("n_tokens") >= n).select(
         id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("pos", "__h"),
+        F.posexplode(_ngram_hashes(n)).alias("pos", "__h"),
     )
     survivors = (
         spans.groupBy("__h", id_col)

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from temporai_mivdp_spark.llmdata.dedup import normalize_text, tokenize
+from temporai_mivdp_spark.llmdata.dedup import _ngram_hashes, normalize_text, tokenize
 
 #: tiny marker lexicons for the n-gram/stopword language heuristic —
 #: enough to separate corpora at scale; swap for fastText offline models
@@ -168,15 +168,7 @@ def repetition_features(
     # gram), so hash to 8 bytes row-locally before the shuffle — same
     # trick as ngram_jaccard_pairs: the (id, gram) exchange carries
     # fixed-width keys instead of n-word strings.
-    grams = toks.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__toks") - n),
-                lambda i: F.xxhash64(F.concat_ws(" ", F.slice("__toks", i + 1, n))),
-            )
-        ).alias("__g"),
-    )
+    grams = toks.select(id_col, F.explode(_ngram_hashes(n)).alias("__g"))
     # one exchange for both aggregation levels: hash-partitioning by the
     # doc id alone satisfies the clustering requirement of the
     # (id, gram) groupBy AND the (id) groupBy (same single-exchange
