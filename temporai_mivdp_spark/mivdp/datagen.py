@@ -23,10 +23,11 @@ from pyspark.sql import functions as F
 
 from temporai_mivdp_spark.operators.filters import semi_join_filter
 from temporai_mivdp_spark.operators.timeseries import (
-    bfill,
+    active_signal,
     dense_grid,
     ffill,
     floor_hours,
+    impute_cascade,
 )
 
 # ---------------------------------------------------------------------------
@@ -230,8 +231,9 @@ def densify_meds(bucketed_meds: DataFrame, n_buckets: int) -> DataFrame:
 
     Reference: pivot stop_time/rate/amount per (hour x item) — the
     pivot_table's implicit *mean over orderids* becomes an explicit
-    groupBy — reindex to the dense grid, ffill, fill(0 / -1), then
-    signal = (ffilled stop - hour > 0), rate/amount masked by signal.
+    groupBy — reindex to the dense grid, signal = (ffilled stop - hour
+    > 0) via W7 ``active_signal``, ffill and fill(-1) rate/amount, both
+    masked by signal.
     Output: (stay_id, hour, itemid, signal, rate, amount).
     """
     hourly = bucketed_meds.groupBy("stay_id", "itemid", "start_time").agg(
@@ -244,16 +246,11 @@ def densify_meds(bucketed_meds: DataFrame, n_buckets: int) -> DataFrame:
         hourly.withColumnRenamed("start_time", "hour"), ["stay_id", "itemid", "hour"], "left"
     )
     keys = ["stay_id", "itemid"]
-    filled = ffill(joined, keys, "hour", "stop_time", out_col="__stop_f")
-    filled = filled.na.fill({"__stop_f": 0.0})
-    filled = ffill(filled, keys, "hour", "rate", out_col="rate")
+    signaled = active_signal(joined, keys, "hour", "stop_time")
+    filled = ffill(signaled, keys, "hour", "rate", out_col="rate")
     filled = ffill(filled, keys, "hour", "amount", out_col="amount")
     filled = filled.na.fill({"rate": -1.0, "amount": -1.0})
-    signaled = filled.withColumn(
-        "signal",
-        F.when(F.col("__stop_f") - F.col("hour") > 0, F.lit(1)).otherwise(F.lit(0)),
-    )
-    return signaled.select(
+    return filled.select(
         "stay_id",
         "hour",
         "itemid",
@@ -280,11 +277,11 @@ def densify_chart(
 ) -> DataFrame:
     """Chart densification (:845-883): value grid + signal.
 
-    Imputation cascade per (stay, item) series: ffill -> bfill -> series
-    mean/median -> 0 (the reference's column-mean step is unreachable for
-    per-stay pivots — every observed column fully fills after ffill+bfill —
-    but is kept for contract parity). ``impute=None`` skips filling and
-    zero-fills directly (:860-868).
+    W6 ``impute_cascade`` per (stay, item) series: ffill -> bfill -> 0.
+    The reference's mean/median step sits between bfill and 0 but is
+    unreachable for per-stay pivots — every observed column fully fills
+    after ffill+bfill — so "Mean" and "Median" both skip it.
+    ``impute=None`` skips filling and zero-fills directly (:860-868).
     Output: (stay_id, hour, itemid, signal, valuenum).
     """
     hourly = bucketed_chart.groupBy("stay_id", "itemid", "start_time").agg(
@@ -299,9 +296,9 @@ def densify_chart(
     )
     keys = ["stay_id", "itemid"]
     if impute in ("Mean", "Median"):
-        filled = ffill(signaled, keys, "hour", "valuenum", out_col="__v")
-        filled = bfill(filled, keys, "hour", "__v", out_col="__v")
-        out = filled.withColumn("valuenum", F.coalesce(F.col("__v"), F.lit(0.0))).drop("__v")
+        out = impute_cascade(
+            signaled, keys, "hour", "valuenum", group_stat=None, default=0.0
+        )
     elif impute is None:
         out = signaled.withColumn("valuenum", F.coalesce(F.col("valuenum"), F.lit(0.0)))
     else:
