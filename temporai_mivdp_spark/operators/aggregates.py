@@ -153,7 +153,7 @@ _WINSORIZE_SMALL_N = 4096
 #: Inputs at or below this many non-null rows take the round-11 window
 #: plan (one sort into #groups partitions) instead of the two-pass
 #: selection. Round-12 measured the crossover on the 32-split synthetic
-#: lineitem (tools/exp_a8_selection_ab.py, interleaved min-of-5,
+#: lineitem (tools/exp_a8_selection_ab.py at commit c349e57, min-of-5,
 #: hash-identical results): 600k rows window 0.910 / selection 0.971;
 #: 6M rows 6.98 / 7.47; 18M rows 16.04 / 8.42; 60M rows 78.09 / 13.72.
 #: The gate sits at the measured parity point — below it the sort
@@ -185,6 +185,14 @@ def _adaptive_accuracy(n_total: int) -> int:
     the cap where sketch memory takes over (see
     _WINSORIZE_ACCURACY_CAP)."""
     return max(_WINSORIZE_ACCURACY, min(_WINSORIZE_ACCURACY_CAP, n_total // 30_000))
+
+
+def _small_n(accuracy: int) -> int:
+    """Bracket-path floor for a sketch of ``accuracy``: groups above it
+    keep 15n/accuracy >= 6 ranks of GK slack, the 2x margin
+    _exact_bounds_by_selection's docstring states, at every adaptive
+    accuracy up to the cap."""
+    return max(_WINSORIZE_SMALL_N, 2 * accuracy // 5)
 
 
 def _exact_bounds_by_window(
@@ -398,8 +406,8 @@ def winsorize(
       (``_adaptive_accuracy``) so the pass-2 candidate buffer is
       absolutely bounded, and the small-group threshold derived from
       that accuracy so the bracket guarantee always covers the target
-      ranks (accuracy/5 + 1; the guarantee needs 15n/accuracy >= ~3
-      ranks of slack).
+      ranks (``_small_n``: 2·accuracy/5, so 15n/accuracy >= 6 ranks of
+      slack where the guarantee needs ~3).
 
     History: ``F.percentile`` was rejected in round 4 (~4x slower — a
     TypedImperativeAggregate whose partial buffers hold EVERY value,
@@ -443,7 +451,7 @@ def winsorize(
                 lower_pct / 100.0,
                 upper_pct / 100.0,
                 accuracy=accuracy,
-                small_n=max(_WINSORIZE_SMALL_N, accuracy // 5 + 1),
+                small_n=_small_n(accuracy),
             )
     else:
         bounds = df.groupBy(*keys).agg(

@@ -145,15 +145,16 @@ def test_winsorize_size_gate_tiers_are_result_identical(spark):
     smooth/tie/small corpus identically (the property the gate's
     transparency rests on) and that the adaptive-accuracy derivation is
     monotone, capped, and keeps the bracket-guarantee coupling
-    small_n >= accuracy/5 + 1 (ADVICE r12: a caller-raised accuracy
-    without a raised small_n could leave groups whose brackets may not
-    cover the target ranks)."""
+    15 * small_n / accuracy >= 6 (a caller-raised accuracy without a
+    raised small_n could leave groups whose brackets may not cover the
+    target ranks)."""
     import numpy as np
 
     from temporai_mivdp_spark.operators.aggregates import (
         _WINSORIZE_ACCURACY,
         _WINSORIZE_ACCURACY_CAP,
         _adaptive_accuracy,
+        _small_n,
     )
 
     rng = np.random.RandomState(11)
@@ -175,6 +176,10 @@ def test_winsorize_size_gate_tiers_are_result_identical(spark):
     assert _adaptive_accuracy(300_000_000) == 10_000
     assert _adaptive_accuracy(900_000_000) == 30_000
     assert _adaptive_accuracy(10**13) == _WINSORIZE_ACCURACY_CAP
+    # bracket margin: groups just above small_n keep >= 6 ranks of slack
+    # (2x the GK minimum) even at the accuracy cap
+    a = _WINSORIZE_ACCURACY_CAP
+    assert 15 * _small_n(a) / a >= 6
 
 
 def test_two_level_agg(spark):
