@@ -131,6 +131,25 @@ def test_headline_set_and_plans_json_in_sync(spark):
     assert all(isinstance(v, str) and len(v) == 12 for v in fingerprints.values())
 
 
+def test_headline_fingerprints_current():
+    """The 15 HEADLINE plans built at the bench scale must match
+    PLANS.json, so a plan change that skips the explain_all regeneration
+    fails the default tier. The check runs in its own JVM because the
+    pin is taken on bench's local[32], and fan_out repartitions to the
+    session's defaultParallelism, which this suite's local[4] changes."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    out = subprocess.run(
+        [sys.executable, "tools/explain_all.py", "--check"],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+
+
 # slow tier (r13, conftest default-skip): builds all 47 pinned plans at sf0.1 (~87s): bench.py re-emits these
 # fingerprints on every bench run and diffs against PLANS.json
 @pytest.mark.slow

@@ -7,6 +7,10 @@ changed fingerprint = the commit that changed the plan is accountable).
 Regenerate after operator changes:
 
     python tools/explain_all.py
+
+``--check`` writes nothing: it builds the HEADLINE plans at the bench
+scale, prints those whose fingerprint differs from PLANS.json, and exits
+1 if any does (the default test tier runs it).
 """
 
 from __future__ import annotations
@@ -48,6 +52,18 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    qs = entrymod.queries()
+    if "--check" in sys.argv[1:]:
+        with open("PLANS.json") as f:
+            pinned = json.load(f)
+        stale = {
+            name: (fp, pinned.get(name))
+            for name in HEADLINE
+            if (fp := plan_fingerprint(qs[name](spark, BENCH_SF))) != pinned.get(name)
+        }
+        spark.stop()
+        print(f"stale (live, pinned): {stale}" if stale else "PLANS.json current")
+        sys.exit(1 if stale else 0)
     lines = [
         "# PLANS — physical-plan summaries per catalog query",
         "",
@@ -59,7 +75,7 @@ def main() -> None:
         "| query | plan nodes | pushed filters |",
         "|---|---|---|",
     ]
-    for name, fn in entrymod.queries().items():
+    for name, fn in qs.items():
         df = fn(spark, SF)
         s = plan_summary(df)
         pf = pushed_filters(df)
@@ -87,7 +103,6 @@ def main() -> None:
         f.write("\n".join(lines) + "\n" + norm_section)
     print(f"wrote PLANS.md ({len(lines) - 8} queries)")
 
-    qs = entrymod.queries()
     # HEADLINE (timed) + PINNED_EXTRAS (planning-only) — same set bench.py
     # fingerprints, so a regeneration here never drops the extras' pins
     fingerprints = {
