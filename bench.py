@@ -82,7 +82,7 @@ HEADLINE = [
 #: BENCH_r05 per-query) but their physical plans are fingerprinted every
 #: bench run, so a plan regression in them raises a PLANS.json diff
 #: instead of surfacing only as a correctness failure. Decade rows for
-#: these live in SCALING.md's extras table (tools/scale_decade_full.py
+#: these live in SCALING.md's extras table (tools/measure.py
 #: --only ...).
 PINNED_EXTRAS = [
     "text_gopher",

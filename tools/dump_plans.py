@@ -1,12 +1,12 @@
 """Dump `.explain("formatted")` for named catalog queries to
-plans/r13/<name>_<suffix>.txt — the optimization round's before/after
-plan evidence (OPTIMIZATION_r13.md).
+OUT_DIR/<name>_<suffix>.txt — the before/after plan evidence of an
+optimization round (plans/r12, plans/r13).
 
-Usage: python tools/dump_plans_r13.py SUFFIX NAME [NAME...]
-       python tools/dump_plans_r13.py after text_langid text_quality ...
+Usage: python tools/dump_plans.py OUT_DIR SUFFIX NAME [NAME...]
+       python tools/dump_plans.py plans/r14 after text_langid text_quality
 
-Planning only (no job execution) at the bench scale factor sf0.1 on
-local[$SPARK_GRAFT_CPUS], matching the *_before.txt files.
+Planning only (no job execution) at $SPARK_GRAFT_SF_DIR (default: the
+bench scale factor sf0.1) on local[$SPARK_GRAFT_CPUS].
 """
 
 from __future__ import annotations
@@ -22,16 +22,12 @@ from temporai_mivdp_spark.session import get_session  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13"
-    )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session(
-        app_name="dump-plans-r13",
+        app_name="dump-plans",
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
         extra_conf={"spark.ui.enabled": "false",
