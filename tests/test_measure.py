@@ -13,8 +13,7 @@ from measure import SHIFT, SHIFTED, inflate  # noqa: E402
 
 from temporai_mivdp_spark.queries import QUERIES  # noqa: E402
 import temporai_mivdp_spark.queries_llm  # noqa: E402,F401
-
-SF = "/root/testdata/sf0.001"
+from tests.conftest import SF_SMOKE as SF  # noqa: E402
 
 
 def test_inflate_two_copies_on_disjoint_key_ranges(spark, tmp_path):

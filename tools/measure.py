@@ -1,9 +1,10 @@
 """Inflate the base tables, time catalog entries at both scales, and hash
 every result: the repo's one scale and A/B measurement tool.
 
-Usage (the base tables come from $SPARK_GRAFT_SF_DIR, as in bench.py):
+Usage (the base tables come from $SPARK_GRAFT_SF_DIR, as in bench.py,
+which must be set):
 
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 python tools/measure.py \\
+    SPARK_GRAFT_SF_DIR=<base sf dir> python tools/measure.py \\
         [--factor 10] [--only KEY,KEY] [--cores 4,8] [--repeats 3] \\
         [--variant KEY=module:callable ...]
 
@@ -233,8 +234,9 @@ def main() -> int:
     args = ap.parse_args()
     if args.factor < 1:
         ap.error("--factor must be at least 1")
-    src = str(Path(os.environ.get("SPARK_GRAFT_SF_DIR",
-                                  "/root/testdata/sf0.1")).resolve())
+    if not os.environ.get("SPARK_GRAFT_SF_DIR"):
+        ap.error("set SPARK_GRAFT_SF_DIR to the directory of the base tables")
+    src = str(Path(os.environ["SPARK_GRAFT_SF_DIR"]).resolve())
     keys = [k for k in args.only.split(",") if k]
     specs = keys + [k for k in dict.fromkeys(map(_key, args.variant))
                     if k not in keys] + args.variant
