@@ -202,8 +202,8 @@ def _posting_pairs_streamed(
     rows while materializing per-key array buffers: the repo's own
     worst 100x cell (SCALING.md r11/r12). The sort this plan pays
     instead is a Tungsten radix sort over fixed-width rows, and the
-    pair emit streams out of it. Measured (exp_jaccard_posting.py, see
-    commit c349e57; min-of-R, identical pair output asserted): sf0.1
+    pair emit streams out of it. Measured (exp_jaccard_posting.py at
+    c349e57, interleaved min-of-R, identical pair output asserted): sf0.1
     2.305 -> 1.955 s; 30x inflation 60.6 -> 23.2 s (2.6x); the
     materialize+self-join alternative ties at 30x but loses at sf0.1
     (3.669) and needs a per-run scratch write. This is the engine's one

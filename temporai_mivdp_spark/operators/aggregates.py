@@ -153,7 +153,7 @@ _WINSORIZE_SMALL_N = 4096
 #: Inputs at or below this many non-null rows take the round-11 window
 #: plan (one sort into #groups partitions) instead of the two-pass
 #: selection. Round-12 measured the crossover on the 32-split synthetic
-#: lineitem (tools/exp_a8_selection_ab.py at commit c349e57, min-of-5,
+#: lineitem (exp_a8_selection_ab.py at c349e57, interleaved min-of-5,
 #: hash-identical results): 600k rows window 0.910 / selection 0.971;
 #: 6M rows 6.98 / 7.47; 18M rows 16.04 / 8.42; 60M rows 78.09 / 13.72.
 #: The gate sits at the measured parity point — below it the sort

@@ -146,6 +146,7 @@ def test_headline_fingerprints_current():
         cwd=Path(__file__).resolve().parents[1],
         capture_output=True,
         text=True,
+        timeout=900,
     )
     assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
 
